@@ -40,6 +40,7 @@ from world_vaccination_coverage_etl_spark.operators.dedup import (  # noqa: E402
 from world_vaccination_coverage_etl_spark.operators.pagerank import (  # noqa: E402
     pagerank,
 )
+from world_vaccination_coverage_etl_spark.operators.staging import stage  # noqa: E402
 from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
 
 
@@ -56,7 +57,8 @@ def main() -> None:
     )
     corpus = docs.unionByName(shifted)
 
-    pairs = minhash_near_dup_pairs(corpus, threshold=0.7).localCheckpoint()
+    # components and pagerank both read the pairs
+    pairs = stage(minhash_near_dup_pairs(corpus, threshold=0.7))
     comp = connected_components(corpus.select("doc_id"), pairs)
     ranks = pagerank(corpus.select("doc_id"), pairs, n_iter=5)
 

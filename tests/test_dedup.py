@@ -777,3 +777,63 @@ def test_signlsh_geometry_certification_scale_fixed():
         assert 1.0 - (1.0 - p) ** tables >= floor - 1e-12
         # occupancy stays near the target (within 2x)
         assert n / (1 << bits) <= 2048
+
+
+# --------------------------------------------------------------------------
+# sign-LSH geometry and the verify partition count over their whole domains
+
+from hypothesis import given, settings  # noqa: E402
+from hypothesis import strategies as st  # noqa: E402
+
+
+@settings(max_examples=300, deadline=None)
+@given(
+    n_rows=st.integers(min_value=0, max_value=10**12),
+    threshold=st.floats(min_value=-1.0, max_value=1.0) | st.sampled_from([-1.0, 1.0]),
+)
+def test_signlsh_geometry_keeps_the_fixed_recall_bound(n_rows, threshold):
+    import math
+
+    from world_vaccination_coverage_etl_spark.operators.dedup import (
+        _signlsh_geometry,
+    )
+
+    bits, tables = _signlsh_geometry(n_rows, threshold)
+    assert 8 <= bits <= 16 and tables >= 12
+    if n_rows <= 65536:
+        assert (bits, tables) == (8, 12)
+    p1 = 1.0 - math.acos(threshold) / math.pi
+    if 0.0 < p1 < 1.0:
+        # log miss rate of (bits, tables) is no worse than (8, 12)'s
+        fixed = 12 * math.log1p(-(p1**8))
+        assert tables * math.log1p(-(p1**bits)) <= fixed * (1 - 1e-9)
+
+
+def test_signlsh_geometry_at_threshold_one_on_a_large_corpus():
+    from world_vaccination_coverage_etl_spark.operators.dedup import (
+        _signlsh_geometry,
+    )
+
+    assert _signlsh_geometry(10**6, 1.0) == (12, 12)
+    # 1 − recall of the fixed geometry underflows to 0 here
+    assert _signlsh_geometry(10**6, 0.9999) == (12, 14)
+
+
+@settings(max_examples=100, deadline=None)
+@given(
+    conf=st.integers(min_value=1, max_value=10**6).map(str) | st.just("auto"),
+    slots=st.integers(min_value=1, max_value=4096),
+)
+def test_verify_partitions_accept_auto(conf, slots):
+    from types import SimpleNamespace
+
+    from world_vaccination_coverage_etl_spark.operators.dedup import (
+        _shuffle_partitions,
+    )
+
+    spark = SimpleNamespace(
+        conf=SimpleNamespace(get=lambda key: conf),
+        sparkContext=SimpleNamespace(defaultParallelism=slots),
+    )
+    expected = slots if conf == "auto" else int(conf)
+    assert _shuffle_partitions(spark) == expected

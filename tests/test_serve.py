@@ -156,3 +156,48 @@ def test_dashboard_embeds_interactive_chart(tmp_path):
     )
     assert "data-chart=" in body and "<script>" in body
     assert "dblclick" in body  # zoom-reset handler shipped
+
+
+def test_serve_main_stages_a_url_csv_and_serves_it(spark, tmp_path, monkeypatch):
+    """The CLI server downloads an http(s) CSV before the ETL runs."""
+    import functools
+    import http.server
+    import os
+
+    from world_vaccination_coverage_etl_spark import serve, session
+
+    examples = os.path.join(os.path.dirname(os.path.dirname(__file__)), "examples")
+    handler = functools.partial(
+        http.server.SimpleHTTPRequestHandler, directory=examples
+    )
+    csv_server = http.server.ThreadingHTTPServer(("127.0.0.1", 0), handler)
+    threading.Thread(target=csv_server.serve_forever, daemon=True).start()
+    url = f"http://127.0.0.1:{csv_server.server_address[1]}/wide_sample.csv"
+
+    served_apps = []
+
+    class OneShotServer:
+        server_address = ("127.0.0.1", 0)
+
+        def __init__(self, app, port):
+            served_apps.append(app)
+
+        def serve_forever(self):
+            raise KeyboardInterrupt
+
+        def server_close(self):
+            pass
+
+    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
+    monkeypatch.setattr(serve, "make_server", OneShotServer)
+    try:
+        rc = serve.main(["--csv", url, "--warehouse", str(tmp_path / "wh")])
+    finally:
+        csv_server.shutdown()
+        csv_server.server_close()
+    assert rc == 0
+    (app,) = served_apps
+    assert {r.country for r in app.clean.select("country").collect()} >= {
+        "Kenya",
+        "Peru",
+    }

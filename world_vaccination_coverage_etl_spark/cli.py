@@ -22,7 +22,6 @@ from __future__ import annotations
 import argparse
 import os
 import sys
-import tempfile
 
 from pyspark.sql import SparkSession
 
@@ -33,7 +32,7 @@ from .functions.report import save_pdf_report
 from .plans.analytics import coverage_series, window_compare
 from .plans.pipeline import run_etl
 from .session import get_spark
-from .sources.csv_source import download_csv
+from .sources.csv_source import local_csv
 from .sources.sinks import sanitize_filename, write_csv
 
 
@@ -175,12 +174,7 @@ def main(argv: list[str] | None = None) -> int:
     args = _parse_args(argv)
     spark = get_spark("world_vaccination_coverage_etl_cli")
 
-    csv_path = args.csv
-    if csv_path.startswith(("http://", "https://")):
-        staging = os.path.join(tempfile.mkdtemp(prefix="vax_staging_"), "wide.csv")
-        csv_path = download_csv(csv_path, staging)
-
-    clean = run_etl(spark, csv_path, args.warehouse)
+    clean = run_etl(spark, local_csv(args.csv), args.warehouse)
     print(f"ETL complete: {clean.count()} clean rows -> {args.warehouse}")
 
     if args.country and args.antigen:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .staging import stage
 from .text import _tokens
 
 
@@ -76,7 +77,7 @@ def learn_bpe_merges(
     # the loop re-reads `vocab` once per iteration; cut lineage so the
     # full corpus pass runs once (vocab-sized cache, like the k-means
     # assignment table)
-    vocab = vocab.localCheckpoint(eager=False)
+    vocab = stage(vocab, lazy=True)
 
     merges: list[tuple[str, str, int]] = []
     for _ in range(n_merges):
@@ -98,9 +99,8 @@ def learn_bpe_merges(
             break
         a, b, c = top[0].a, top[0].b, int(top[0].c)
         merges.append((a, b, c))
-        vocab = vocab.select(
-            "wc", _apply_merge(F.col("syms"), a, b).alias("syms")
-        ).localCheckpoint(eager=False)
+        vocab = vocab.select("wc", _apply_merge(F.col("syms"), a, b).alias("syms"))
+        vocab = stage(vocab, lazy=True)
     return merges
 
 

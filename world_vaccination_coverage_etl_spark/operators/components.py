@@ -277,7 +277,7 @@ def oriented_triangles(
     the degree order, so results are comparable with an id-oriented
     enumeration (the deterministic form small-graph oracles use).
     """
-    o = orient_edges(edges, src_col, dst_col).localCheckpoint(eager=False)
+    o = stage(orient_edges(edges, src_col, dst_col), lazy=True)
     w1 = o.select(F.col("x").alias("wx"), F.col("y").alias("wy"),
                   F.col("ydeg").alias("wydeg"))
     w2 = o.select(F.col("x").alias("wx2"), F.col("y").alias("wz"),

@@ -37,18 +37,6 @@ from pyspark.sql import types as T
 from .staging import stage
 
 
-def _stage(df: DataFrame, staging_dir: str | None, name: str) -> DataFrame:
-    """Cut a DataFrame's lineage so expensive kernels evaluate ONCE.
-
-    The signature/shingle Arrow UDFs feed both sides of the blocking
-    self-joins; without a lineage cut Catalyst inlines them into every
-    consumer and the kernel runs 2-4×.  Delegates to the shared
-    :func:`..staging.stage` helper (localCheckpoint by default, durable
-    parquet staging when ``staging_dir`` is given — see that module
-    for the cluster-scale rationale).
-    """
-    return stage(df, staging_dir, name)
-
 # --------------------------------------------------------------------------
 # exact
 
@@ -330,7 +318,7 @@ def minhash_near_dup_pairs(
         # fused single-pass kernel (bands + shingles; see
         # _minhash_bands_and_shingles): one tokenize+shingle pass, one
         # staged table feeding all four consumers below
-        both = _stage(
+        both = stage(
             df.select(
                 F.col(id_col),
                 _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
@@ -351,15 +339,15 @@ def minhash_near_dup_pairs(
                 "band_idx", "band_hash"
             )
         )
-        # lineage cuts (see _stage): `banded` feeds both sides of the
+        # lineage cuts (see staging.stage): `banded` feeds both sides of the
         # candidate self-join and `sh` both id-keyed re-attach joins —
         # without the cut each Arrow kernel runs twice
-        banded = _stage(banded, staging_dir, "minhash_banded")
+        banded = stage(banded, staging_dir, "minhash_banded")
 
         sh = df.select(
             F.col(id_col), shingles_udf(shingle_k)(F.col(text_col)).alias("shingles")
         ).filter(F.size("shingles") > 0)
-        sh = _stage(sh, staging_dir, "minhash_shingles")
+        sh = stage(sh, staging_dir, "minhash_shingles")
 
     cand_ids = (
         banded.alias("a")
@@ -454,7 +442,7 @@ def minhash_screen_new_batch(
         # fused single-pass kernel over the batch (r14; see
         # _minhash_bands_and_shingles): band signatures AND the verify
         # shingles in one tokenize+shingle pass instead of two
-        both = _stage(
+        both = stage(
             new_df.select(
                 F.col(id_col),
                 _minhash_bands_and_shingles(F.col(text_col)).alias("bs"),
@@ -470,12 +458,12 @@ def minhash_screen_new_batch(
             F.col(id_col).alias("new_id"), F.col("shingles").alias("sh_n")
         ).filter(F.size("sh_n") > 0)
     else:
-        new_bands = _stage(
+        new_bands = stage(
             minhash_band_signatures(new_df, text_col, id_col),
             staging_dir,
             "incr_new_bands",
         )
-        new_sh = _stage(
+        new_sh = stage(
             new_df.select(
                 F.col(id_col).alias("new_id"),
                 shingles_udf(shingle_k)(F.col(text_col)).alias("sh_n"),
@@ -1101,7 +1089,7 @@ def simhash_near_dup_pairs(
     # cut the lineage so the signature kernel runs ONCE: the blocking
     # self-join would otherwise re-evaluate the Arrow UDF on every join
     # side (observed 4 ArrowEvalPython nodes in the executed plan).
-    signed = _stage(signed, staging_dir, "simhash_signed")
+    signed = stage(signed, staging_dir, "simhash_signed")
     chunks = F.array(
         *[
             F.struct(
@@ -1498,7 +1486,7 @@ def simhash_md5_near_dup_pairs(
     signed = make_sigs(df, text_col, id_col)
     # one narrow materialization so the signature agg runs once, not
     # once per blocking-join side (same rationale as the FNV flavor)
-    signed = _stage(signed, staging_dir, "simhash_md5_signed")
+    signed = stage(signed, staging_dir, "simhash_md5_signed")
     g = signed.groupBy("sig_hi", "sig_lo").agg(F.min(id_col).alias("gid"))
     members = signed.join(g, on=["sig_hi", "sig_lo"]).select(id_col, "gid")
 
@@ -1699,10 +1687,24 @@ def _signlsh_geometry(
         )
     if bits <= 8:
         return 8, 12  # the documented certified geometry, verbatim
-    target_recall = 1.0 - (1.0 - p1**8) ** 12  # fixed-geometry bound
-    p = p1**bits
-    tables = max(12, math.ceil(math.log(1.0 - target_recall) / math.log(1.0 - p)))
+    if not 0.0 < p1 < 1.0:
+        # θ = 0 or π: every table collides always or never, so the
+        # table count cannot change recall
+        return bits, 12
+    # miss rate of the fixed geometry, (1 − p1^8)^12, in log space: it
+    # underflows 1 − recall to 0 once the threshold nears 1
+    log_miss = 12 * math.log1p(-(p1**8))
+    tables = max(12, math.ceil(log_miss / math.log1p(-(p1**bits))))
     return bits, tables
+
+
+def _shuffle_partitions(spark) -> int:
+    """``spark.sql.shuffle.partitions`` as an int; platforms that set it
+    to ``"auto"`` get the cluster's slot count instead."""
+    value = spark.conf.get("spark.sql.shuffle.partitions")
+    if value == "auto":
+        return spark.sparkContext.defaultParallelism
+    return int(value)
 
 
 def _verify_by_bucket(df: DataFrame, kernel, out_schema: str) -> DataFrame:
@@ -1725,8 +1727,7 @@ def _verify_by_bucket(df: DataFrame, kernel, out_schema: str) -> DataFrame:
     repartition, so tiny local runs keep their parallelism too).
     Results are identical: same groups, same kernel per group.
     """
-    spark = df.sparkSession
-    nparts = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    nparts = _shuffle_partitions(df.sparkSession)
 
     def run(batches):
         bufs = list(batches)
@@ -1930,7 +1931,7 @@ def embedding_screen_new_batch(
     ``embedding_cosine_dup_pairs`` (defaults: ≈0.9989 at c=0.95,
     exactly 1 for true duplicates); precision is exact.
     """
-    new_bkts = _stage(
+    new_bkts = stage(
         signlsh_bucket_assignments(
             new_df, vec_col, id_col,
             dim=dim, lsh_bits=lsh_bits, lsh_tables=lsh_tables,

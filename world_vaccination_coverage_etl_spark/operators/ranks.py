@@ -297,7 +297,7 @@ def _offset_or_die(ocol: str, op: str) -> Column:
         F.expr(
             f"raise_error('{op}: bucket key missing from the broadcast "
             "offset table — the input DataFrame re-evaluated "
-            "differently between passes; localCheckpoint() "
+            "differently between passes; stage() "
             "non-deterministic inputs before ranking')"
         ).cast("long"),
     )
@@ -321,7 +321,7 @@ def two_phase_ranks(
 
     Value and tiebreak columns must be non-null.  ``df`` must be
     DETERMINISTIC across re-evaluation (counts are collected in one
-    pass, ranks computed in another): ``localCheckpoint()`` any
+    pass, ranks computed in another): ``staging.stage()`` any
     lineage containing sampling/UUID/non-deterministic UDFs first —
     a mismatch fails loudly via the offset-join guard instead of
     emitting silent NULL ranks.

@@ -1,22 +1,28 @@
-"""Lineage-cut staging shared by the multi-pass operators.
+"""The one place the package cuts a DataFrame's lineage.
 
-The dedup blocking joins and the iterative loops (connected
-components, k-means) re-consume intermediates that are expensive to
-recompute (Arrow signature kernels) or grow lineage per round
-(label propagation).  ``stage()`` cuts the lineage two ways:
+Multi-pass plans re-consume intermediates that are expensive to
+recompute (Arrow signature kernels, tokenize+count passes) or whose
+lineage grows per round (label propagation, BPE merges).  Each call
+site of :func:`stage` states the shape of its consumers:
 
-- ``staging_dir=None`` (default, the local/bench path):
-  ``localCheckpoint(eager=False)`` — materialize per-executor on first
-  use, no temp-dir management.  Caveat at cluster scale: checkpointed
-  partitions PIN to the executors that computed them (no durable
-  copy), so executor loss forces recompute and dynamic allocation
-  can't release those hosts.
-- ``staging_dir=<path>``: write the intermediate to parquet and
-  re-read it — a durable staging table any executor can scan, the
-  per-stage-materialization pattern every large pipeline uses.  Costs
-  one write+read of the (narrow) staged projection; survives executor
-  loss and lets AQE re-plan downstream joins from REAL staged
-  statistics.
+- **concurrent consumers** (default, eager): the table feeds both sides
+  of a join or several branches of one plan.  A lazy checkpoint is
+  filled by its first consumer, but AQE submits a join's map stages
+  concurrently, so both can compute the whole subtree ("Block rdd_N
+  already exists") and every kernel above the cut runs twice.  The
+  eager cut runs the subtree once, up front.
+- **sequential chain** (``lazy=True``): consumers run one after another
+  (iterative loops, successive actions), so the first fills the blocks
+  and the rest read them, without an up-front job.
+- **durable** (``staging_dir`` given): the table is written to
+  ``staging_dir/name`` as parquet and read back.  It survives executor
+  loss, any executor can scan it, and AQE plans downstream joins from
+  its real statistics, for one write and one read of the projection.
+
+Local checkpoints pin their blocks to the executors that computed them,
+so executor loss forces a recompute and dynamic allocation cannot
+release those hosts; operators that run at cluster scale take a
+``staging_dir`` deployment path and pass it through.
 """
 
 from __future__ import annotations
@@ -26,16 +32,20 @@ import os
 from pyspark.sql import DataFrame
 
 
-def stage(df: DataFrame, staging_dir: str | None, name: str) -> DataFrame:
-    # eager=True (r14): a LAZY checkpoint is materialized by its first
-    # consumer — but AQE submits a join's two map stages CONCURRENTLY,
-    # and both then compute the whole staged subtree in parallel (one
-    # wins the block-store race: "Block rdd_N already exists" warnings),
-    # so every Arrow kernel above a lazily-staged table ran twice.
-    # Eager materialization runs the subtree exactly once; measured
-    # dup_cluster_sizes cold 5.1 -> 3.9 s at sf0.1.
+def stage(
+    df: DataFrame,
+    staging_dir: str | None = None,
+    name: str | None = None,
+    *,
+    lazy: bool = False,
+) -> DataFrame:
+    """Cut ``df``'s lineage: eager local checkpoint by default, lazy with
+    ``lazy=True``, durable parquet at ``staging_dir/name`` when
+    ``staging_dir`` is given."""
     if staging_dir is None:
-        return df.localCheckpoint(eager=True)
+        return df.localCheckpoint(eager=not lazy)
+    if lazy:
+        raise ValueError("durable staging (staging_dir) cannot be lazy")
     path = os.path.join(staging_dir, name)
     df.write.mode("overwrite").parquet(path)
     return df.sparkSession.read.parquet(path)

@@ -17,6 +17,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .staging import stage
+
 # Small, deterministic marker-word tables (top function words).
 LANG_MARKERS: dict[str, list[str]] = {
     "en": ["the", "and", "of", "to", "in", "is", "that", "it", "was", "for"],
@@ -193,16 +195,10 @@ def tfidf_top_terms(
     toks = df.select(
         F.col(id_col), F.explode(_tokens_arr(F.col(text_col))).alias("term")
     )
-    # tf feeds both df_t and the score join: localCheckpoint so the
-    # tokenize+count pass runs once, not once per consumer (r13 opt).
-    # Within-query materialization, lifetime = this plan's blocks; on a
-    # real cluster the durable form is operators/staging.stage with a
-    # staging_dir (localCheckpoint pins blocks to their executors and
-    # cannot recompute them after executor loss — see staging.py; the
-    # same caveat applies to every eager=False site in this module)
-    tf = toks.groupBy(id_col, "term").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    # tf feeds both df_t and the score join: staged so the
+    # tokenize+count pass runs once, not once per consumer (r13 opt)
+    tf = toks.groupBy(id_col, "term").agg(F.count(F.lit(1)).alias("tf"))
+    tf = stage(tf, lazy=True)
     df_t = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df_t"))
     n = df.agg(F.count_distinct(F.col(id_col)).alias("n_docs"))
     scored = (
@@ -485,10 +481,9 @@ def unigram_logprob(
         F.col(id_col), F.explode(_tokens_arr(F.col(text_col))).alias("w")
     )
     # tf feeds both the vocabulary count and the score join:
-    # localCheckpoint so the tokenize+count pass runs once (r13 opt)
-    tf = toks.groupBy(id_col, "w").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    # staged so the tokenize+count pass runs once (r13 opt)
+    tf = toks.groupBy(id_col, "w").agg(F.count(F.lit(1)).alias("tf"))
+    tf = stage(tf, lazy=True)
     cnt = tf.groupBy("w").agg(F.sum("tf").alias("c"))
     tot = cnt.agg(F.sum("c").alias("n"))
     return (
@@ -631,10 +626,9 @@ def bigram_logprob(
         ).alias("b"),
     ).select(id_col, F.col("b.prev").alias("prev"), F.col("b.w").alias("w"))
     # tf feeds both the bigram vocabulary and the score join:
-    # localCheckpoint so the bigram build runs once (r13 opt)
-    tf = bg.groupBy(id_col, "prev", "w").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    # staged so the bigram build runs once (r13 opt)
+    tf = bg.groupBy(id_col, "prev", "w").agg(F.count(F.lit(1)).alias("tf"))
+    tf = stage(tf, lazy=True)
     c2 = tf.groupBy("prev", "w").agg(F.sum("tf").alias("c2"))
     c1 = c2.groupBy("prev").agg(F.sum("c2").alias("c1"))
     return (

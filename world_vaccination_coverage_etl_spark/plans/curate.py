@@ -29,6 +29,7 @@ from ..operators.dedup import (
 )
 from ..operators.packing import pack_token_bins
 from ..operators.sampling import hash_split
+from ..operators.staging import stage
 from ..operators.text import with_language_id, with_quality_score, with_token_count
 
 
@@ -51,11 +52,6 @@ def curate_training_corpus(
     """
     os.makedirs(out_dir, exist_ok=True)
 
-    def stage(df: DataFrame, name: str) -> DataFrame:
-        path = os.path.join(out_dir, name)
-        df.write.mode("overwrite").parquet(path)
-        return spark.read.parquet(path)
-
     # 1-2: language + quality gates (row-local JVM expressions)
     gated = (
         with_quality_score(with_language_id(documents))
@@ -63,17 +59,19 @@ def curate_training_corpus(
         .filter(F.col("quality_score") >= min_quality)
         .select("doc_id", "text")
     )
-    gated = stage(gated, "s1_gated")
+    gated = stage(gated, out_dir, "s1_gated")
 
     # 3: exact dedup (hash-groupBy + semi-join, keep min id)
-    uniq = stage(exact_dedup(gated), "s2_exact_dedup")
+    uniq = stage(exact_dedup(gated), out_dir, "s2_exact_dedup")
 
     # 4: near-dup clustering — pairs → connected components → keep the
     # component representative (min doc id)
     pairs = minhash_near_dup_pairs(uniq, threshold=near_dup_threshold)
     comp = connected_components(uniq.select("doc_id"), pairs)
     keepers = comp.filter(F.col("doc_id") == F.col("component_id")).select("doc_id")
-    deduped = stage(uniq.join(keepers, on="doc_id", how="left_semi"), "s3_near_dedup")
+    deduped = stage(
+        uniq.join(keepers, on="doc_id", how="left_semi"), out_dir, "s3_near_dedup"
+    )
 
     # 5: benchmark decontamination (drop docs sharing n-grams with the
     # eval set)
@@ -83,14 +81,14 @@ def curate_training_corpus(
         .distinct()
     )
     cleaned = stage(
-        deduped.join(dirty, on="doc_id", how="left_anti"), "s4_decontaminated"
+        deduped.join(dirty, on="doc_id", how="left_anti"), out_dir, "s4_decontaminated"
     )
 
     # 6-8: token counts, deterministic split, greedy packing per split
     counted = with_token_count(cleaned).select(
         "doc_id", "text", "ws_tokens"
     )
-    split = stage(hash_split(counted, train_frac=train_frac), "s5_split")
+    split = stage(hash_split(counted, train_frac=train_frac), out_dir, "s5_split")
     # packing projects to the assignment columns; join text back by id
     packed = pack_token_bins(
         split,
@@ -105,6 +103,7 @@ def curate_training_corpus(
             F.col("lang_id").alias("lang"),
             "ws_tokens", "split", "bin_idx",
         ),
+        out_dir,
         "corpus",
     )
     return final

@@ -17,6 +17,7 @@ applied throughout:
 
 from __future__ import annotations
 
+import os
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -55,6 +56,7 @@ from ..operators.similarity import (
     pq_encode_batched,
     sampled_centroids,
 )
+from ..operators.staging import stage
 from ..operators.text import (
     BPE_ISH_PATTERN,
     LANG_MARKERS,
@@ -265,13 +267,14 @@ def pooled_parquet(kind: str, spark: SparkSession, sf_dir: str, build) -> DataFr
     perturbation sweep) recompute instead of re-read."""
     key = (kind, sf_dir)
     path = _MATERIALIZE_POOL.get(key)
-    if path is None:
-        from ..scratch import scratch_dir
+    if path is not None:
+        return spark.read.parquet(path)
+    from ..scratch import scratch_dir
 
-        path = scratch_dir(f"pool_{kind}_")
-        build(spark, sf_dir).write.mode("overwrite").parquet(path)
-        _MATERIALIZE_POOL[key] = path
-    return spark.read.parquet(path)
+    staging_dir = scratch_dir(f"pool_{kind}_")
+    pooled = stage(build(spark, sf_dir), staging_dir, kind)
+    _MATERIALIZE_POOL[key] = os.path.join(staging_dir, kind)
+    return pooled
 
 
 def clear_pools() -> None:

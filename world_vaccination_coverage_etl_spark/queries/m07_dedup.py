@@ -4,6 +4,7 @@ Split from the former single-file queries.py (r5 verdict item 8);
 registration order is preserved by the package __init__ import order.
 """
 
+from ..operators.staging import stage
 from ._core import *  # noqa: F401,F403
 from .m06_text_sampling import (  # shared oracle-SQL fragments
     DOC_SHIFT,
@@ -621,9 +622,7 @@ def curation_pipeline_stages(spark, sf_dir):
     # the surviving (doc_id, grams) slice to parquet runs both once —
     # the production pattern at 100 TB too: each curation stage
     # persists, downstream stages scan the materialized table.
-    tmp = scratch_dir("curation_uniq_")
-    uniq.write.mode("overwrite").parquet(tmp)
-    uniq = spark.read.parquet(tmp)
+    uniq = stage(uniq, scratch_dir("curation_uniq_"), "uniq")
     yield "exact_dedup_shingle", uniq, True
     pairs = ngram_jaccard_pairs_from_grams(uniq, block_col=None, threshold=0.7)
     yield "near_dup_pairs", pairs, False

@@ -4,6 +4,8 @@ Split from the former single-file queries.py (r5 verdict item 8);
 registration order is preserved by the package __init__ import order.
 """
 
+from ..operators.dedup import normalized_text
+from ..operators.staging import stage
 from ._core import *  # noqa: F401,F403
 from .m06_text_sampling import VEC_SHIFT  # shared id-shift constant
 
@@ -1053,8 +1055,6 @@ def q_quantization_error_by_label(spark, sf_dir):
     "distinct)",
 )
 def q_dedup_rate_by_source(spark, sf_dir):
-    from ..operators.dedup import normalized_text
-
     d = _t(spark, sf_dir, "documents")
     n = d.select("source", normalized_text(F.col("text")).alias("norm"))
     return (
@@ -1169,6 +1169,22 @@ def q_fk_orphan_audit(spark, sf_dir):
     )
 
 
+def _word_tokens(text: F.Column) -> F.Column:
+    """Words of the normalized text, split on non-alphanumerics."""
+    return F.array_remove(F.split(normalized_text(text), r"[^a-z0-9]+"), "")
+
+
+def _staged_word_freq(spark, sf_dir):
+    """(w, f) corpus word counts, vocabulary-sized.  Lazily staged: the
+    rank passes over it run one after another, and each would otherwise
+    tokenize the corpus again."""
+    words = _t(spark, sf_dir, "documents").select(
+        F.explode(_word_tokens(F.col("text"))).alias("w")
+    )
+    freq = words.groupBy("w").agg(F.count(F.lit(1)).cast("double").alias("f"))
+    return stage(freq, lazy=True)
+
+
 @register(
     "vocab_pareto_coverage",
     r"""
@@ -1216,23 +1232,7 @@ def q_vocab_pareto_coverage(spark, sf_dir):
         two_phase_cumsum,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(
-            F.array_remove(
-                F.split(
-                    F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))),
-                    r"[^a-z0-9]+",
-                ),
-                "",
-            )
-        ).alias("w")
-    )
-    freq = (
-        toks.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("double").alias("f"))
-        .localCheckpoint(eager=False)
-    )
+    freq = _staged_word_freq(spark, sf_dir)
     spec = RankSpec(
         "f",
         "w",
@@ -1311,25 +1311,7 @@ def q_zipf_slope_words(spark, sf_dir):
         two_phase_ranks,
     )
 
-    d = _t(spark, sf_dir, "documents")
-    toks = d.select(
-        F.explode(
-            F.array_remove(
-                F.split(
-                    F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))),
-                    r"[^a-z0-9]+",
-                ),
-                "",
-            )
-        ).alias("w")
-    )
-    # vocab-sized reduction; lineage-cut so the bucket-count pass and
-    # the final pass tokenize the corpus ONCE, not once per action
-    freq = (
-        toks.groupBy("w")
-        .agg(F.count(F.lit(1)).cast("double").alias("f"))
-        .localCheckpoint(eager=False)
-    )
+    freq = _staged_word_freq(spark, sf_dir)
     spec = RankSpec(
         "f",
         "w",
@@ -1412,7 +1394,8 @@ def q_gains_table_embedding(spark, sf_dir):
         "vec_id",
         F.round(_norm(F.col("embedding")), 6).alias("score"),
         F.when(F.col("label") % 2 == 0, 1).otherwise(0).alias("pos"),
-    ).localCheckpoint(eager=False)
+    )
+    s = stage(s, lazy=True)
     d = two_phase_ntile(
         s, 10, RankSpec("score", "vec_id", value_desc=True), out_col="decile"
     ).select("pos", "decile")
@@ -1866,16 +1849,13 @@ def q_rfm_user_segments(spark, sf_dir):
     )
     # user-dimension reduction; lineage-cut so the fused quantile and
     # count passes compute the purchase rollup ONCE, not once per action
-    m = (
-        p.crossJoin(F.broadcast(ref))
-        .select(
-            "user_id",
-            F.datediff("ref_day", "last_day").cast("long").alias("recency_days"),
-            "frequency",
-            "monetary",
-        )
-        .localCheckpoint(eager=False)
+    m = p.crossJoin(F.broadcast(ref)).select(
+        "user_id",
+        F.datediff("ref_day", "last_day").cast("long").alias("recency_days"),
+        "frequency",
+        "monetary",
     )
+    m = stage(m, lazy=True)
     specs = [
         RankSpec("recency_days", "user_id", out_col="_rr"),
         RankSpec("frequency", "user_id", out_col="_rf", value_desc=True),
@@ -2011,14 +1991,11 @@ def q_auc_rank_embedding(spark, sf_dir):
         F.round(_norm(F.col("embedding")), 6).alias("score"),
         F.when(F.col("label") % 2 == 0, 1).otherwise(0).alias("pos"),
     )
-    g = (
-        s.groupBy("score")
-        .agg(
-            F.count(F.lit(1)).cast("double").alias("n_g"),
-            F.sum("pos").cast("double").alias("pos_g"),
-        )
-        .localCheckpoint(eager=False)
+    g = s.groupBy("score").agg(
+        F.count(F.lit(1)).cast("double").alias("n_g"),
+        F.sum("pos").cast("double").alias("pos_g"),
     )
+    g = stage(g, lazy=True)
     r = two_phase_cumsum(
         g,
         RankSpec("score", "score"),
@@ -2128,13 +2105,7 @@ _BLOCKLIST_TERMS = ("leak", "spill", "crash")
 )
 def q_doc_blocklist_filter(spark, sf_dir):
     d = _t(spark, sf_dir, "documents")
-    toks = F.array_remove(
-        F.split(
-            F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))),
-            r"[^a-z0-9]+",
-        ),
-        "",
-    )
+    toks = _word_tokens(F.col("text"))
     blocked = (
         F.size(
             F.array_intersect(

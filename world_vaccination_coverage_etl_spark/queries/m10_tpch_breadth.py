@@ -4,9 +4,11 @@ Split from the former single-file queries.py (r5 verdict item 8);
 registration order is preserved by the package __init__ import order.
 """
 
+from ..operators.staging import stage
 from ._core import *  # noqa: F401,F403
 from .m06_text_sampling import _DUCK_SHINGLES, _DUCK_TOKS  # oracle fragments
 from .m07_dedup import _DUCK_SHINGLES_U, _docs_self_union
+from .m08_similarity import _word_tokens
 
 # --------------------------------------------------------------------- #
 # TPC-H breadth completion: Q11 / Q12 / Q20 adaptations.  With these the
@@ -676,7 +678,7 @@ def _fuzzy_blocked_pairs(spark, sf_dir):
 def q_fuzzy_match_topk_docs(spark, sf_dir):
     k = 3
     _g, members, gpairs = _fuzzy_group_graph(spark, sf_dir)
-    members = members.localCheckpoint(eager=False)
+    members = stage(members, lazy=True)
     # symmetric group adjacency; per (gid, dist) keep the k neighbor
     # groups with the smallest min-member id — gid IS that min id
     adj = gpairs.select(
@@ -1565,7 +1567,7 @@ def q_fuzzy_entity_clusters(spark, sf_dir):
         from ..operators.components import connected_components
 
         g, members, gpairs = _fuzzy_group_graph(spark, sf_dir)
-        gpairs = gpairs.select("gid_a", "gid_b").localCheckpoint(eager=False)
+        gpairs = stage(gpairs.select("gid_a", "gid_b"), lazy=True)
         # matched groups: ≥2 members (within-group dist-0 pairs exist)
         # or any cross-group match — singleton unmatched groups carry
         # no linkage decision and stay out, mirroring the pair-graph
@@ -1577,7 +1579,8 @@ def q_fuzzy_entity_clusters(spark, sf_dir):
             .unionAll(gpairs.select(F.col("gid_b").alias("gid")))
             .distinct()
         )
-        matched = matched.localCheckpoint(eager=False)
+        # two concurrent consumers (the CC nodes and the member join)
+        matched = stage(matched)
         m = members.join(matched, on="gid")
         # r14 (guide §1.2 — shrink what the ITERATIVE operator sees):
         # the doc→gid star edges used to ride through every CC round,
@@ -1663,16 +1666,14 @@ def q_naive_bayes_lang_confusion(spark, sf_dir):
     toks = d.select(
         "doc_id", "lang", F.explode(_toks(F.col("text"))).alias("w")
     )
-    # localCheckpoint: tf feeds THREE consumers (cc, dt, matched) and
-    # exchange reuse does NOT cover them — profiled at sf0.1, the
+    # staged: tf feeds THREE consumers (cc, dt, matched) and exchange
+    # reuse does NOT cover them — profiled at sf0.1, the
     # tokenize+partial-agg map stage ran three times (~2.5 s each,
     # single-task).  Materializing the small tf table once cuts the
-    # query ~20% and is exactly what a production pipeline would stage
-    # (r13 optimization round; deterministic content, so certification
-    # is unaffected).
-    tf = toks.groupBy("doc_id", "lang", "w").agg(
-        F.count(F.lit(1)).alias("tf")
-    ).localCheckpoint(eager=False)
+    # query ~20% (r13 optimization round; deterministic content, so
+    # certification is unaffected).
+    tf = toks.groupBy("doc_id", "lang", "w").agg(F.count(F.lit(1)).alias("tf"))
+    tf = stage(tf, lazy=True)
     cc = tf.groupBy(F.col("lang").alias("c"), "w").agg(
         F.sum("tf").alias("cwc")
     )
@@ -2126,16 +2127,7 @@ def q_bm25_topk_docs(spark, sf_dir):
     d = fan_out(
         _t(spark, sf_dir, "documents"), sf_dir, min_bytes=16 << 20
     )
-    toks = d.select(
-        "doc_id",
-        F.array_remove(
-            F.split(
-                F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))),
-                r"[^a-z0-9]+",
-            ),
-            "",
-        ).alias("toks"),
-    )
+    toks = d.select("doc_id", _word_tokens(F.col("text")).alias("toks"))
     dl = toks.select("doc_id", F.size("toks").alias("dl"))
     stats = dl.agg(
         F.count(F.lit(1)).cast("double").alias("n"),

@@ -155,7 +155,7 @@ def main(argv: list[str] | None = None) -> int:
 
     from .plans.pipeline import run_etl
     from .session import get_spark
-    from .sources.csv_source import download_csv
+    from .sources.csv_source import local_csv
 
     p = argparse.ArgumentParser(description="coverage dashboard server")
     p.add_argument("--csv", required=True, help="wide CSV path or http(s) URL")
@@ -164,8 +164,7 @@ def main(argv: list[str] | None = None) -> int:
     args = p.parse_args(argv)
 
     spark = get_spark("coverage-dashboard")
-    csv_path = download_csv(args.csv)
-    clean = run_etl(spark, csv_path, args.warehouse)
+    clean = run_etl(spark, local_csv(args.csv), args.warehouse)
     server = make_server(DashboardApp(spark, clean), args.port)
     print(f"serving on http://127.0.0.1:{server.server_address[1]}/")
     try:

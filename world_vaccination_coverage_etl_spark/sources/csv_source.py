@@ -11,6 +11,7 @@ logical plan.
 from __future__ import annotations
 
 import os
+import tempfile
 import urllib.request
 
 from pyspark.sql import DataFrame, SparkSession
@@ -33,6 +34,15 @@ def download_csv(url: str, staging_path: str, timeout: float = DEFAULT_TIMEOUT_S
     with open(staging_path, "wb") as f:
         f.write(data)
     return staging_path
+
+
+def local_csv(path_or_url: str) -> str:
+    """A local path for ``path_or_url``: an http(s) URL is downloaded to
+    a fresh staging file, a local path is returned unchanged."""
+    if not path_or_url.startswith(("http://", "https://")):
+        return path_or_url
+    staging = os.path.join(tempfile.mkdtemp(prefix="vax_staging_"), "wide.csv")
+    return download_csv(path_or_url, staging)
 
 
 def read_wide_csv(spark: SparkSession, path: str) -> DataFrame:

@@ -40,6 +40,7 @@ from ..operators.dedup import (
     minhash_band_signatures,
     minhash_screen_new_batch,
 )
+from ..operators.staging import stage
 
 
 def init_ingest_state(
@@ -76,11 +77,8 @@ def streaming_neardup_ingest(
     """
 
     def body(batch: DataFrame, batch_id: int) -> None:
-        batch = (
-            batch.select("doc_id", "text")
-            .filter(F.length(F.trim(F.col("text"))) > 0)
-            .localCheckpoint()
-        )
+        batch = batch.select("doc_id", "text")
+        batch = stage(batch.filter(F.length(F.trim(F.col("text"))) > 0))
         if batch.isEmpty():
             return
         index = spark.read.parquet(index_dir)
@@ -88,11 +86,9 @@ def streaming_neardup_ingest(
         pairs = minhash_screen_new_batch(
             index, base, batch, threshold=threshold
         )
-        keepers = batch.join(
-            pairs.select(F.col("new_id").alias("doc_id")).distinct(),
-            "doc_id",
-            "left_anti",
-        ).localCheckpoint()  # materialize BEFORE appending to the dirs it reads
+        new_ids = pairs.select(F.col("new_id").alias("doc_id")).distinct()
+        # materialize BEFORE appending to the dirs it reads
+        keepers = stage(batch.join(new_ids, "doc_id", "left_anti"))
         if keepers.isEmpty():
             return
         keepers.write.mode("append").parquet(accepted_dir)

@@ -819,6 +819,42 @@ def test_signlsh_geometry_at_threshold_one_on_a_large_corpus():
     assert _signlsh_geometry(10**6, 0.9999) == (12, 14)
 
 
+@settings(max_examples=60, deadline=None)
+@given(
+    bits=st.integers(min_value=9, max_value=16),
+    threshold=st.floats(min_value=0.0, max_value=1.0),
+)
+def test_explicit_lsh_bits_with_auto_tables_keep_the_fixed_recall_bound(
+    spark, bits, threshold
+):
+    """An explicit ``lsh_bits`` above 8 with ``lsh_tables="auto"`` must
+    get enough tables to keep the (8, 12) geometry's recall."""
+    import math
+    from unittest import mock
+
+    from world_vaccination_coverage_etl_spark.operators import dedup
+
+    class Geometry(Exception):
+        pass
+
+    def capture(dim, lsh_bits, lsh_tables, seed):
+        raise Geometry(lsh_bits, lsh_tables)
+
+    df = spark.createDataFrame([(1, [1.0, 0.0])], "vec_id long, embedding array<double>")
+    with mock.patch.object(dedup, "_signlsh_table_buckets", capture):
+        try:
+            dedup.embedding_cosine_dup_pairs(
+                df, threshold=threshold, lsh_bits=bits, dim=2
+            )
+        except Geometry as got:
+            used_bits, tables = got.args
+    assert used_bits == bits
+    p1 = 1.0 - math.acos(threshold) / math.pi
+    if p1 < 1.0:
+        fixed = 12 * math.log1p(-(p1**8))
+        assert tables * math.log1p(-(p1**bits)) <= fixed * (1 - 1e-9)
+
+
 @settings(max_examples=100, deadline=None)
 @given(
     conf=st.integers(min_value=1, max_value=10**6).map(str) | st.just("auto"),

@@ -27,12 +27,12 @@ from __future__ import annotations
 
 import json
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import measure  # noqa: E402
 from world_vaccination_coverage_etl_spark.queries.m07_dedup import (  # noqa: E402
     curation_pipeline_stages,
 )
@@ -56,7 +56,7 @@ def probe(spark, sf_dir: str) -> dict[str, dict]:
             secs, rows = t_gen, df.count()
         else:
             t0 = time.monotonic()
-            df.write.format("noop").mode("overwrite").save()
+            measure.run(df)
             secs = time.monotonic() - t0
             rows = df.count()
         out[name] = {"s": round(secs, 2), "rows": rows}
@@ -120,17 +120,7 @@ def main() -> int:
             json.dump(results, fh, indent=1)
 
     lines = render(results)
-    scaling = os.path.join(root, "SCALING.md")
-    text = open(scaling).read() if os.path.exists(scaling) else ""
-    block = "\n".join(lines).rstrip() + "\n"
-    if SECTION in text:
-        text = re.sub(
-            re.escape(SECTION) + r".*?(?=\n## |\Z)", block, text, flags=re.S
-        )
-    else:
-        text = text.rstrip() + "\n\n" + block
-    with open(scaling, "w") as fh:
-        fh.write(text)
+    measure.replace_section(os.path.join(root, "SCALING.md"), SECTION, lines)
     print("\n".join(lines))
     return 0
 

@@ -7,8 +7,7 @@ parquet warehouse with the same schemas to ``.scale/sf1`` (gitignored;
 /root/testdata is read-only) so every registry query and bench.py can
 run against it unmodified via ``SPARK_GRAFT_SF_DIR``.
 
-Amplification (seeded by the copy index c in 0..9, same scheme as
-tools/scale_probe.py):
+Amplification (seeded by the copy index c in 0..9):
 
 - facts get 10 copies with ids shifted into disjoint ranges
   (``+ c * 10_000_000``): orders.o_orderkey and lineitem.l_orderkey

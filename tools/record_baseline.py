@@ -41,6 +41,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
+import measure  # noqa: E402
 from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
 from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
 
@@ -54,12 +55,7 @@ def main() -> int:
     out_path = None
     if "--out" in sys.argv:
         out_path = sys.argv[sys.argv.index("--out") + 1]
-    only = None
-    if "--only" in sys.argv:
-        only = set(sys.argv[sys.argv.index("--only") + 1].split(","))
-        missing = only - set(REGISTRY)
-        if missing:
-            raise SystemExit(f"unknown queries: {sorted(missing)}")
+    only = measure.parse_only(sys.argv[1:], REGISTRY)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     head = subprocess.run(
         ["git", "rev-parse", "--short", "HEAD"], cwd=REPO,
@@ -67,31 +63,9 @@ def main() -> int:
     ).stdout.strip()
     load_start = _loadavg()
     spark = get_spark("record_baseline")
-    # same warmup as bench.py (recording and comparison MUST share
-    # measurement context): q1 + one scan of every warehouse table
-    REGISTRY["q1_pricing_summary"].fn(spark, sf_dir).write.format(
-        "noop"
-    ).mode("overwrite").save()
-    from world_vaccination_coverage_etl_spark.schemas import STAR_TABLES
-    from world_vaccination_coverage_etl_spark.sources.registry import load_table
-
-    for t in STAR_TABLES:
-        load_table(spark, sf_dir, t).write.format("noop").mode(
-            "overwrite"
-        ).save()
-    # spawn the full python worker pool (see bench.py)
-    dp = spark.sparkContext.defaultParallelism
-    spark.range(dp * 4, numPartitions=dp).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
-
-    def timed(name: str) -> float:
-        spark._jvm.System.gc()
-        t0 = time.time()
-        REGISTRY[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        return time.time() - t0
+    # same warmup and sampling as bench.py (recording and comparison
+    # MUST share measurement context)
+    measure.warm(spark, sf_dir)
 
     per_query: dict[str, float] = {}
     t_wall = time.time()
@@ -101,15 +75,15 @@ def main() -> int:
     # pass apart — decorrelated from the minutes-long host-speed
     # windows that poison back-to-back samples together (see
     # bench.py's loop comment for the measured evidence)
-    names = sorted(REGISTRY) if only is None else sorted(only & set(REGISTRY))
+    names = sorted(REGISTRY if only is None else only)
     samples: dict[str, list[float]] = {n: [] for n in names}
     for _pass in range(2):
         for name in names:
-            samples[name].append(timed(name))
+            samples[name].append(measure.sample(spark, name, sf_dir))
     for name in names:
         a, b = samples[name]
         if min(a, b) < 1.0:  # sub-second cohort: MEDIAN-of-3
-            best = sorted((a, b, timed(name)))[1]
+            best = sorted((a, b, measure.sample(spark, name, sf_dir)))[1]
         else:  # plan-dominated cohort: best-of-2 min (bench.py's rule)
             best = min(a, b)
         per_query[name] = round(best, 3)

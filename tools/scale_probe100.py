@@ -28,10 +28,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+import measure  # noqa: E402
 from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
 from world_vaccination_coverage_etl_spark.queries._core import (  # noqa: E402
     POOLED_QUERIES as _POOLED,
@@ -160,29 +160,6 @@ PROBE = [
 ]
 
 
-def _exec_totals(spark) -> dict:
-    """Cumulative executor/stage counters from the app status store —
-    per-run DELTAS attribute a slow probe to spill / GC / shuffle
-    instead of leaving a 5x swing unexplained (r9 verdict item 5).
-    Reads the same store the UI serves; no event log needed."""
-    store = spark.sparkContext._jsc.sc().statusStore()
-    ds = [getattr(store, f"stageList$default${i}")() for i in (2, 3, 4, 5)]
-    st = store.stageList(None, *ds)
-    spill = run_ms = shw = peak = 0
-    for i in range(st.size()):
-        s = st.apply(i)
-        spill += s.memoryBytesSpilled() + s.diskBytesSpilled()
-        run_ms += s.executorRunTime()
-        shw += s.shuffleWriteBytes()
-        peak = max(peak, s.peakExecutionMemory())
-    ex = store.executorList(True)
-    gc_ms = sum(ex.apply(i).totalGCTime() for i in range(ex.size()))
-    return {
-        "spill": spill, "run_ms": run_ms, "shuffle_w": shw,
-        "peak": peak, "gc_ms": gc_ms,
-    }
-
-
 def _delta_metrics(before: dict, after: dict) -> dict:
     mb = 1024 * 1024
     return {
@@ -198,11 +175,7 @@ def _delta_metrics(before: dict, after: dict) -> dict:
 
 def main() -> int:
     args = list(sys.argv[1:])
-    only = None
-    if "--only" in args:
-        i = args.index("--only")
-        only = set(args[i + 1].split(","))
-        del args[i : i + 2]
+    only = measure.parse_only(args, [n for n, _ in PROBE])
     sf01 = args[0] if len(args) > 0 else "/root/testdata/sf0.1"
     sf10 = args[1] if len(args) > 1 else ".scale/sf10"
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -211,10 +184,7 @@ def main() -> int:
     if os.path.exists(cache):
         results = json.load(open(cache))
     spark = get_spark("scale_probe100")
-    # warm JVM/codegen/Python-worker pools outside measurement
-    REGISTRY["q1_pricing_summary"].fn(spark, sf01).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    measure.warm(spark, sf01)
 
     todo = [
         (n, w)
@@ -224,25 +194,20 @@ def main() -> int:
     for name, want_rows in todo:
         fn = REGISTRY[name].fn
         rec = {}
-        # pooled queries must measure the real computation at BOTH
-        # SFs, not a pool hit left by a sibling probe (r11)
-        from world_vaccination_coverage_etl_spark.queries._core import (
-            clear_pools,
-        )
-
-        clear_pools()
         for key, sf_dir in (("sf01", sf01), ("sf10", sf10)):
             try:
-                before = _exec_totals(spark)
+                before = measure.stage_totals(spark)
             except Exception:  # metrics are advisory diagnostics
                 before = None
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            rec[f"{key}_s"] = round(time.monotonic() - t0, 3)
+            # pooled queries must measure the real computation at BOTH
+            # SFs, not a pool hit left by a sibling probe (r11)
+            rec[f"{key}_s"] = round(
+                measure.sample(spark, name, sf_dir, cold=True), 3
+            )
             if before is not None:
                 try:
                     rec[f"{key}_metrics"] = _delta_metrics(
-                        before, _exec_totals(spark)
+                        before, measure.stage_totals(spark)
                     )
                 except Exception:
                     pass
@@ -253,21 +218,12 @@ def main() -> int:
             # materialize-once/consume-many; the survival bound still
             # binds on the COLD number above)
             if name in _POOLED:
-                t1 = time.monotonic()
-                fn(spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                rec[f"{key}_pooled_s"] = round(time.monotonic() - t1, 3)
-            # session-storage hygiene: heavy sf10 queries localCheckpoint
-            # multi-GB intermediates; left persistent across a 6-query
-            # probe session they starved a later broadcast build
-            # (dup_graph_triangles OOM'd in-session, passed alone).  A
-            # 1000-executor cluster never shares one JVM like this —
-            # release between probes so each measures ITS plan.
-            spark.catalog.clearCache()
-            for rdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                rdd.unpersist()
-            spark._jvm.System.gc()
+                rec[f"{key}_pooled_s"] = round(
+                    measure.sample(spark, name, sf_dir), 3
+                )
+            # heavy sf10 queries stage multi-GB intermediates; a
+            # 1000-executor cluster never shares one JVM like this
+            measure.release(spark)
         rec["time_ratio"] = round(rec["sf10_s"] / max(rec["sf01_s"], 1e-9), 1)
         if "sf10_pooled_s" in rec:
             rec["pooled_ratio"] = round(
@@ -373,20 +329,7 @@ def main() -> int:
         "",
     ]
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "SCALING.md")
-    text = open(path).read()
-    if SECTION in text:
-        head, _, rest = text.partition(SECTION)
-        # keep anything after the section (sections are append-ordered;
-        # this one is last, so rest is dropped up to the next header)
-        nxt = rest.find("\n## ")
-        tail = rest[nxt:] if nxt != -1 else ""
-        text = head.rstrip() + "\n\n" + "\n".join(lines) + tail
-    else:
-        text = text.rstrip() + "\n\n" + "\n".join(lines)
-    with open(path, "w") as fh:
-        fh.write(text)
+    measure.replace_section(os.path.join(root, "SCALING.md"), SECTION, lines)
     print(json.dumps({"results": results, "over_bound": over}))
     return 1 if over else 0
 

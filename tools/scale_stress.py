@@ -31,6 +31,8 @@ import json
 import os
 import sys
 
+import measure
+
 BOUND = 15.0  # 10x input * 1.5
 SECTION = "## Whole-registry sf1 stress"
 
@@ -128,15 +130,7 @@ def main() -> int:
         "",
     ]
 
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    path = os.path.join(root, "SCALING.md")
-    text = open(path).read()
-    if SECTION in text:
-        text = text[: text.index(SECTION)].rstrip() + "\n\n"
-    else:
-        text = text.rstrip() + "\n\n"
-    with open(path, "w") as fh:
-        fh.write(text + "\n".join(lines))
+    measure.replace_section(os.path.join(root, "SCALING.md"), SECTION, lines)
     print(
         json.dumps(
             {

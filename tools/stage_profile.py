@@ -1,10 +1,11 @@
 """Per-stage empirical profile of one registry query (guide §1.1).
 
 Runs the named query (bench-faithful warmup + noop sink), then dumps
-per-stage metrics from the Spark UI REST API: executor run time,
+per-stage metrics from the app status store: executor run time,
 shuffle read/write bytes, task counts, python boundary time.  This is
 the "open the Stages tab" loop from the optimization guide, scripted
-for a headless sandbox.
+for a headless sandbox; the status store is populated with the UI off,
+so no port is opened.
 
 Usage::
 
@@ -14,24 +15,14 @@ Usage::
 from __future__ import annotations
 
 import argparse
-import json
 import os
 import sys
-import time
-import urllib.request
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
-from world_vaccination_coverage_etl_spark.schemas import STAR_TABLES  # noqa: E402
+import measure  # noqa: E402
 from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
-from world_vaccination_coverage_etl_spark.sources.registry import load_table  # noqa: E402
-
-
-def rest(base: str, path: str):
-    with urllib.request.urlopen(base + path) as r:
-        return json.loads(r.read())
 
 
 def main() -> int:
@@ -42,63 +33,39 @@ def main() -> int:
     ap.add_argument("queries", nargs="+")
     args = ap.parse_args()
 
-    spark = get_spark("stage_profile", extra_conf={
-        "spark.ui.enabled": "true",
-        "spark.ui.port": "4050",
-    })
-    sc = spark.sparkContext
-    base = sc.uiWebUrl + "/api/v1/applications/" + sc.applicationId
-
-    # bench-faithful warmup
-    REGISTRY["q1_pricing_summary"].fn(spark, args.sf).write.format(
-        "noop").mode("overwrite").save()
-    for t in STAR_TABLES:
-        load_table(spark, args.sf, t).write.format("noop").mode(
-            "overwrite").save()
-    dp = sc.defaultParallelism
-    spark.range(dp * 4, numPartitions=dp).mapInPandas(
-        lambda it: it, "id long").write.format("noop").mode("overwrite").save()
+    spark = get_spark("stage_profile")
+    measure.warm(spark, args.sf)
+    dp = spark.sparkContext.defaultParallelism
 
     for name in args.queries:
         for run_i in range(args.runs):
-            spark._jvm.System.gc()
-            jobs_before = {j["jobId"] for j in rest(base, "/jobs")}
-            sc.setJobDescription(f"profile:{name}")
-            t0 = time.time()
-            REGISTRY[name].fn(spark, args.sf).write.format("noop").mode(
-                "overwrite").save()
-            wall = time.time() - t0
-            sc.setJobDescription(None)
-
-            jobs = [j for j in rest(base, "/jobs")
-                    if j["jobId"] not in jobs_before]
-            stage_ids = sorted({s for j in jobs for s in j["stageIds"]})
-            print(f"\n=== {name} run {run_i}: wall {wall:.3f}s, "
-                  f"{len(jobs)} jobs, {len(stage_ids)} stages ===")
+            jobs_before = set(measure.jobs(spark))
+            wall = measure.sample(spark, name, args.sf)
+            jobs = [s for j, s in measure.jobs(spark).items()
+                    if j not in jobs_before]
+            stage_ids = {s for ss in jobs for s in ss}
             rows = []
-            for sid in stage_ids:
-                try:
-                    infos = rest(base, f"/stages/{sid}")
-                except Exception:
+            for s in measure.stages(spark, stage_ids):
+                if s["status"] == "SKIPPED":
+                    rows.append((s["id"], 0.0, 0, "SKIPPED", "", 0, 0, 0.0))
                     continue
-                for s in infos:
-                    if s["status"] == "SKIPPED":
-                        rows.append((sid, 0.0, 0, "SKIPPED", "", 0, 0, 0.0))
-                        continue
-                    rows.append((
-                        sid,
-                        (s.get("executorRunTime") or 0) / 1e3,
-                        s.get("numCompleteTasks") or s.get("numTasks"),
-                        s.get("name", "")[:60],
-                        s.get("details", "").split("\n")[0][:60],
-                        s.get("shuffleReadBytes", 0),
-                        s.get("shuffleWriteBytes", 0),
-                        (s.get("executorDeserializeTime") or 0) / 1e3,
-                    ))
+                rows.append((
+                    s["id"],
+                    s["run_ms"] / 1e3,
+                    s["tasks"],
+                    s["name"][:60],
+                    s["details"].split("\n")[0][:60],
+                    s["shuffle_r"],
+                    s["shuffle_w"],
+                    s["deser_ms"] / 1e3,
+                ))
             # submissionTime-ordered wall attribution is messy in local
             # mode (stages overlap); report executor time as the cost
             # signal, which is what we can actually reduce.
             rows.sort(key=lambda r: -r[1])
+            print(f"\n=== {name} run {run_i}: wall {wall:.3f}s, "
+                  f"{len(jobs)} jobs, {len(stage_ids)} stages, "
+                  f"{sum(r[2] for r in rows)} tasks ===")
             tot = sum(r[1] for r in rows)
             print(f"  total executorRunTime {tot:.2f}s "
                   f"(x{tot/wall if wall else 0:.1f} of wall on {dp} cores)")

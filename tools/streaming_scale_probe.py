@@ -31,11 +31,10 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from world_vaccination_coverage_etl_spark.queries import REGISTRY  # noqa: E402
+import measure  # noqa: E402
 from world_vaccination_coverage_etl_spark.session import get_spark  # noqa: E402
 
 INPUT_RATIO = 10.0
@@ -77,11 +76,7 @@ def _events_rows(sf_dir: str) -> int:
 
 def main() -> int:
     args = list(sys.argv[1:])
-    only = None
-    if "--only" in args:
-        i = args.index("--only")
-        only = set(args[i + 1].split(","))
-        del args[i : i + 2]
+    only = measure.parse_only(args, PROBE)
     sf01 = args[0] if len(args) > 0 else "/root/testdata/sf0.1"
     sf1 = args[1] if len(args) > 1 else ".scale/sf1"
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -90,26 +85,19 @@ def main() -> int:
     if os.path.exists(cache):
         results = json.load(open(cache))
     spark = get_spark("streaming_scale_probe")
-    # warm the JVM / python worker pools outside measurement
-    REGISTRY["q1_pricing_summary"].fn(spark, sf01).write.format("noop").mode(
-        "overwrite"
-    ).save()
+    measure.warm(spark, sf01)
 
     rows = {"sf01": _events_rows(sf01), "sf1": _events_rows(sf1)}
     todo = [
         n for n in PROBE if ((n in only) if only else (n not in results))
     ]
     for name in todo:
-        fn = REGISTRY[name].fn
         rec = {}
         for key, sf_dir in (("sf01", sf01), ("sf1", sf1)):
-            t0 = time.monotonic()
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            wall = time.monotonic() - t0
+            wall = measure.sample(spark, name, sf_dir)
             rec[f"{key}_s"] = round(wall, 3)
             rec[f"{key}_rows_per_s"] = round(rows[key] / max(wall, 1e-9))
-            spark.catalog.clearCache()
-            spark._jvm.System.gc()
+            measure.release(spark)
         rec["time_ratio"] = round(rec["sf1_s"] / max(rec["sf01_s"], 1e-9), 1)
         rec["retention"] = round(
             rec["sf1_rows_per_s"] / max(rec["sf01_rows_per_s"], 1), 2
@@ -160,16 +148,7 @@ def main() -> int:
         "",
     ]
 
-    path = os.path.join(root, "SCALING.md")
-    text = open(path).read()
-    if SECTION in text:
-        head, _, rest = text.partition(SECTION)
-        tail = rest.partition("\n## ")[2]
-        text = head + "\n".join(lines) + ("\n## " + tail if tail else "")
-    else:
-        text = text.rstrip() + "\n\n" + "\n".join(lines)
-    with open(path, "w") as fh:
-        fh.write(text)
+    measure.replace_section(os.path.join(root, "SCALING.md"), SECTION, lines)
     print(json.dumps({"over_bound": over, "n": len(results)}))
     return 1 if over else 0
 

@@ -1678,7 +1678,6 @@ def _signlsh_geometry(
     """
     import math
 
-    p1 = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
     bits = 8
     if n_rows > target_occupancy:
         bits = max(
@@ -1687,15 +1686,24 @@ def _signlsh_geometry(
         )
     if bits <= 8:
         return 8, 12  # the documented certified geometry, verbatim
-    if not 0.0 < p1 < 1.0:
-        # θ = 0 or π: every table collides always or never, so the
-        # table count cannot change recall
-        return bits, 12
+    return bits, _signlsh_tables(bits, threshold)
+
+
+def _signlsh_tables(bits: int, threshold: float) -> int:
+    """Table count that gives ``bits``-bit sign-LSH at least the recall
+    the certified (8, 12) geometry has at ``threshold``; 12 at or below
+    8 bits, where 12 tables already meet it."""
+    import math
+
+    p1 = 1.0 - math.acos(min(max(threshold, -1.0), 1.0)) / math.pi
+    if bits <= 8 or not 0.0 < p1 < 1.0:
+        # fewer bits only raise per-table collision; at θ = 0 or π every
+        # table collides always or never, so tables cannot change recall
+        return 12
     # miss rate of the fixed geometry, (1 − p1^8)^12, in log space: it
     # underflows 1 − recall to 0 once the threshold nears 1
     log_miss = 12 * math.log1p(-(p1**8))
-    tables = max(12, math.ceil(log_miss / math.log1p(-(p1**bits))))
-    return bits, tables
+    return max(12, math.ceil(log_miss / math.log1p(-(p1**bits))))
 
 
 def _shuffle_partitions(spark) -> int:
@@ -1774,8 +1782,9 @@ def embedding_cosine_dup_pairs(
       count — certification-scale corpora get exactly (8, 12), bigger
       corpora get more bits (bounded bucket occupancy — the per-bucket
       verify is O(occ²), so fixed bits is quadratic in n) with tables
-      scaled to preserve the same recall bound.  Explicitly pass
-      ``lsh_bits=0`` to force the full cross join (the recall oracle
+      scaled to preserve the same recall bound; an explicit
+      ``lsh_bits`` with ``lsh_tables="auto"`` gets tables scaled the
+      same way.  Explicitly pass ``lsh_bits=0`` to force the full cross join (the recall oracle
       on small inputs).
 
     Shuffle shape mirrors ``minhash_near_dup_pairs``: one shuffle
@@ -1789,16 +1798,13 @@ def embedding_cosine_dup_pairs(
         cols.append(F.col(block_col))
     vecs = df.select(*cols)
 
-    if not block_col and lsh_bits == "auto":
-        # one cheap count job sizes the geometry (same dispatch pattern
-        # as ngram_jaccard_pairs_from_grams' prefix_filter="auto")
-        n_rows = vecs.count()
-        auto_bits, auto_tables = _signlsh_geometry(n_rows, threshold)
-        lsh_bits = auto_bits
+    if not block_col:
+        if lsh_bits == "auto":
+            # one cheap count job sizes the geometry (same dispatch
+            # pattern as ngram_jaccard_pairs_from_grams' prefix_filter)
+            lsh_bits = _signlsh_geometry(vecs.count(), threshold)[0]
         if lsh_tables == "auto":
-            lsh_tables = auto_tables
-    if lsh_tables == "auto":
-        lsh_tables = 12
+            lsh_tables = _signlsh_tables(lsh_bits, threshold)
 
     if block_col or lsh_bits <= 0:
         a, b = vecs.alias("a"), vecs.alias("b")
